@@ -2,9 +2,10 @@ package graft
 
 /** Full-catalog rows-only smoke gate (r5 judge directive #4): execute EVERY
   * `SparkEntry.queries` entry at the given scale with full materialization
-  * (the SpotTime count+hash consumption — count() alone lets Catalyst prune
-  * per-row-expensive projections, trap #2), recording rc, rows and seconds
-  * per query as one JSON line each plus a trailing summary line.
+  * (count plus an xxhash64 sum over every column — count() alone lets
+  * Catalyst prune per-row-expensive projections, trap #2), recording rc,
+  * rows and seconds per query as one JSON line each plus a trailing summary
+  * line.
   *
   * The oracle gate runs sf0.01/sf0.1; this is the cheap way to EXECUTE the
   * whole catalog at sf1, where every layout/scale surprise so far has

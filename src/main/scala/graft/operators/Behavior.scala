@@ -266,19 +266,12 @@ object Behavior {
       // columns groups -0.0 with 0.0 (SQL key equality), so the change-probe
       // image must agree or the cursor would reset mid-series on ±0.0 keys
       .withColumn("__spk", graft.core.KeyImage.ofNormalized(df, keyCols))
-      .repartition(keyCols: _*)
-      // sort on the REAL key columns, not the image (r16 optimization round
-      // — the scanPattern precedent): KeyImage is injective, so grouping by
-      // (keyCols, order) equals grouping by (__spk, order), and Catalyst can
-      // now ELIDE this sort when an upstream window already ordered the
-      // partition by (key, order) — q162's plan dropped its second Sort. The
-      // image stays as the collision-free key-CHANGE probe in the scan.
-      .sortWithinPartitions(keyCols ++ orderCols: _*)
     val preSchema = pre.schema
     val lenIdx = preSchema.fieldIndex(lenCol)
     val keyIdx = preSchema.fieldIndex("__spk")
-    // numeric-width-agnostic long read of the candidate length (the external
-    // path used getAs[Number].longValue — integral widths only, same set)
+    // the candidate length as a long, from any integral width. A
+    // non-integral length (Double, Float, Decimal) fails here at build, on
+    // purpose: every caller passes an integral length.
     val lenGet: org.apache.spark.sql.catalyst.InternalRow => Long =
       preSchema(lenIdx).dataType match {
         case org.apache.spark.sql.types.LongType    => _.getLong(lenIdx)
@@ -287,16 +280,22 @@ object Behavior {
         case org.apache.spark.sql.types.ByteType    => _.getByte(lenIdx).toLong
         case dt => sys.error(s"skipPastSelect: length column '$lenCol' must be integral, got $dt")
       }
-    // INTERNAL-row scan (r17 optimization round — the MR object boundary was
-    // the verdict's #3): the previous Dataset.mapPartitions over external
-    // Rows planned a DeserializeToObject/SerializeFromObject pair, so every
-    // field of every row round-tripped through Scala objects (UTF8String →
-    // String, micros → LocalDateTime, …) just to read one length and one key
-    // per row. This filter streams the sorted UnsafeRows through UNTOUCHED —
-    // one-in/one-out, no buffering, no per-row conversion — cloning only the
-    // tiny key image it must retain across rows for the key-change probe.
-    graft.core.PlanProbe.record("skip_past_child", pre.queryExecution)
-    val rdd = pre.queryExecution.toRdd.mapPartitions { it =>
+    // One KeyedScan node (graft.plans.KeyedScan): it requires the key
+    // clustering and the (key, order) sort, so EnsureRequirements reuses the
+    // candidate window's exchange and sort when they already provide them
+    // (q162: one shuffle, one sort) — sorting on the REAL key columns, not
+    // the image, is what lets it: KeyImage is injective, so grouping by
+    // (keyCols, order) equals grouping by (__spk, order). The image stays as
+    // the collision-free key-CHANGE probe in the scan.
+    //
+    // The scan reads INTERNAL rows: an external-Row mapPartitions would plan
+    // a DeserializeToObject/SerializeFromObject pair and round-trip every
+    // field of every row through Scala objects (UTF8String → String, micros
+    // → LocalDateTime, …) just to read one length and one key per row. This
+    // filter streams the sorted UnsafeRows through UNTOUCHED — one-in/one-out,
+    // no buffering, no per-row conversion — cloning only the tiny key image it
+    // must retain across rows for the key-change probe.
+    graft.plans.KeyedScan.frame(pre, keyCols, orderCols, preSchema) { it =>
       var curKey: org.apache.spark.unsafe.types.UTF8String = null
       var consume = 0L
       it.filter { r =>
@@ -313,9 +312,7 @@ object Behavior {
           if (len > 0L) { consume = len - 1L; true } else false
         }
       }
-    }
-    org.apache.spark.sql.graft.Bridge.internalDf(df.sparkSession, rdd, preSchema)
-      .drop("__spk")
+    }.drop("__spk")
   }
 
   /** First-order Markov transition matrix over per-user event sequences:

@@ -14,12 +14,12 @@ import org.apache.spark.sql.types._
   *   - Catalyst evaluates every DEFINE predicate ONCE per row as a boolean
   *     column (lag/lead physical navigation included) — codegen'd, vectorized,
   *     pushdown-friendly; the scan never re-evaluates a predicate.
-  *   - The scan itself is ONE hash repartition on the key + one in-partition
-  *     sort on (key, order) — Catalyst collapses it into the DEFINE window's
-  *     own exchange/sort, so the whole operator costs a single shuffle — and
-  *     a streaming `mapPartitions` pass holding only the current match
-  *     attempt's rows. Keys parallelize across partitions; nothing reaches
-  *     the driver.
+  *   - The scan itself is ONE [[graft.plans.KeyedScan]] node: it requires
+  *     hash clustering on the key and an in-partition sort on (key, order),
+  *     which the DEFINE window's own exchange/sort already provides, so the
+  *     whole operator costs a single shuffle — and it streams each
+  *     partition holding only the current match attempt's rows. Keys
+  *     parallelize across partitions; nothing reaches the driver.
   *
   * Matching is the SQL-standard GREEDY semantics shared with the bounded
   * rewrite and [[graft.streaming.StreamingSequenceMatchQ]]: quantifier counts
@@ -344,15 +344,13 @@ object MatchRecognize {
     require(missing.isEmpty, s"MEASURES reference columns absent from the input: ${missing.mkString(", ")}")
 
     val withDefs = (0 until n).foldLeft(df)((d, i) => d.withColumn(s"__mr_def_$i", defs(i)))
-    // sort on the REAL key columns (not the image) so Catalyst can collapse
-    // this sort into the DEFINE window's own (key, order) sort; the image is
-    // only the collision-free equality probe for key-change detection
+    // the scan sorts on the REAL key columns (not the image) so its sort is
+    // the DEFINE window's own (key, order) sort; the image is only the
+    // collision-free equality probe for key-change detection
     val pre = withDefs
-      // zero-normalized image: the sort below groups -0.0 with 0.0, so the
+      // zero-normalized image: the sort groups -0.0 with 0.0, so the
       // key-change probe must agree (see KeyImage.ofNormalized)
       .withColumn("__mr_spk", graft.core.KeyImage.ofNormalized(withDefs, keyCols))
-      .repartition(keyCols: _*)
-      .sortWithinPartitions(keyCols ++ orderCols: _*)
 
     val inSchema = pre.schema
     val inTypes: Array[DataType] = inSchema.fields.map(_.dataType)
@@ -442,23 +440,24 @@ object MatchRecognize {
     val tsTypeName = inTypes(tsIdx).simpleString
     val needsDyn = dynArr.exists(_ != null)
 
-    // INTERNAL-row scan (r17 optimization round — the MR object boundary was
-    // the r16 verdict's top remaining cost): the previous Dataset
-    // .mapPartitions over external Rows planned a DeserializeToObject /
-    // SerializeFromObject pair, converting EVERY field of EVERY row
-    // (UTF8String → String, micros-long → LocalDateTime, Decimal → BigDecimal
-    // and back) before the NFA read its one boolean per DEFINE. This pass
-    // consumes the sorted UnsafeRows directly — the only per-row work is one
-    // buffer copy (rows must outlive the iterator slot for backtracking) —
-    // and emits internal rows; Bridge.internalDf wraps them without a second
-    // conversion. One semantic note: min/max MEASURES over StringType now
-    // compare UTF8String binary order — Spark's and DuckDB's own string
-    // collation — where the external path compared Java UTF-16 Strings; the
-    // two differ only when a supplementary code point meets a BMP char in
-    // [U+E000, U+FFFF] at the first differing position (no oracle or spec
-    // data does — and the new order is the engine-native one).
-    graft.core.PlanProbe.record("mr_scan_child", pre.queryExecution)
-    val rddOut = pre.queryExecution.toRdd.mapPartitions { it =>
+    // One KeyedScan node (graft.plans.KeyedScan) requires the key clustering
+    // and the (key, order) sort; EnsureRequirements reuses the DEFINE
+    // window's exchange and sort when it has them, so the whole operator
+    // costs one shuffle and one sort, planned with the caller's query.
+    //
+    // The scan reads INTERNAL rows: an external-Row mapPartitions would plan
+    // a DeserializeToObject / SerializeFromObject pair and convert EVERY
+    // field of EVERY row (UTF8String → String, micros-long → LocalDateTime,
+    // Decimal → BigDecimal and back) before the NFA read its one boolean per
+    // DEFINE. This pass consumes the sorted UnsafeRows directly — the only
+    // per-row work is one buffer copy (rows must outlive the iterator slot
+    // for backtracking) — and emits internal rows of `outSchema`. One
+    // semantic note: min/max MEASURES over StringType compare UTF8String
+    // binary order — Spark's and DuckDB's own string collation — where an
+    // external-Row scan would compare Java UTF-16 Strings; the two differ
+    // only when a supplementary code point meets a BMP char in
+    // [U+E000, U+FFFF] at the first differing position (spec-pinned).
+    graft.plans.KeyedScan.frame(pre, keyCols, orderCols, outSchema) { it =>
       new scala.collection.AbstractIterator[org.apache.spark.sql.catalyst.InternalRow] {
         import org.apache.spark.sql.catalyst.InternalRow
         import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -1014,6 +1013,5 @@ object MatchRecognize {
         }
       }
     }
-    org.apache.spark.sql.graft.Bridge.internalDf(df.sparkSession, rddOut, outSchema)
   }
 }

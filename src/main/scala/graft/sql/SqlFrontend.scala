@@ -1293,12 +1293,13 @@ object SqlFrontend {
         val cand0 = spark.sql(s"SELECT *, __mr.__len AS __graft_len FROM ($candidateSql) __graft_mr0")
         // column pruning through the opaque selection pass (r16 optimization
         // round, guide §2.3 "project before the exchange"): skipPastSelect's
-        // mapPartitions is a black box to Catalyst, so every source column —
-        // including wide payloads no clause references — was shuffled, sorted
-        // and object-converted. The scan needs only the key/order columns and
-        // the candidate struct (measures already live INSIDE __mr, computed
-        // by the CASE above, before the opaque boundary); the outer select
-        // reads partCols + __mr fields. Identical output rows (q162 oracle).
+        // KeyedScan reads every child column by ordinal, so Catalyst cannot
+        // prune through it and every source column — including wide payloads
+        // no clause references — would be shuffled and sorted. The scan
+        // needs only the key/order columns and the candidate struct
+        // (measures already live INSIDE __mr, computed by the CASE above,
+        // before the opaque boundary); the outer select reads partCols +
+        // __mr fields. Identical output rows (q162 oracle).
         val candRefs = (partCols ++ ordCols)
           .flatMap("\\w+".r.findAllIn(_)).map(_.toLowerCase).toSet
         val cand = cand0.select(cand0.columns
@@ -1496,12 +1497,13 @@ object SqlFrontend {
         s"MATCH_RECOGNIZE: measure alias '$a' uses the reserved __mr_ prefix") }
       val input00full = spark.sql(s"SELECT * FROM $tbl")
       // Column pruning through the opaque NFA scan (r16 optimization round,
-      // guide §2.3): scanPattern's mapPartitions is a black box to Catalyst,
-      // so every source column — wide payloads included — crossed the
-      // exchange, both sorts and the object boundary even when no clause
-      // referenced it. Under ONE ROW PER MATCH the output is partition keys
-      // + measures, and every column the scan can possibly touch appears
-      // textually in PARTITION BY / ORDER BY / DEFINE / MEASURES (the
+      // guide §2.3): scanPattern's KeyedScan reads every child column by
+      // ordinal, so Catalyst cannot prune through it and every source column
+      // — wide payloads included — would cross the exchange and the sort
+      // even when no clause referenced it. Under ONE ROW PER MATCH the
+      // output is partition keys + measures, and every column the scan can
+      // possibly touch appears textually in PARTITION BY / ORDER BY /
+      // DEFINE / MEASURES (the
       // substitution and the interpreted conditions both resolve names from
       // these same texts), so keeping exactly the source columns mentioned
       // there is safe over-approximation — quoted literals contribute

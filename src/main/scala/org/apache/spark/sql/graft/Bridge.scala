@@ -7,7 +7,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Bridge into Spark's `private[sql]` Column↔Expression conversions — the
   * standard technique for extension libraries that ship native Catalyst
   * expressions with a Column-level API (Spark 4 removed the public
-  * `new Column(expr)` constructor in favor of ColumnNode).
+  * `new Column(expr)` constructor in favor of ColumnNode) — and into
+  * `Dataset.ofRows`, which wraps a logical plan as a DataFrame.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -22,19 +23,11 @@ object Bridge {
   def resolvedExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
 
-  /** Wrap an RDD of INTERNAL rows as a DataFrame (r17 optimization round):
-    * the public `createDataFrame(RDD[Row], schema)` twin forces a
-    * Scala-object round trip on every field of every row, and a
-    * `Dataset.mapPartitions` over external Rows plans a
-    * DeserializeToObject/SerializeFromObject pair around the lambda — the
-    * per-row tax the MATCH_RECOGNIZE scans used to pay. This is the same
-    * `private[sql]` surface Spark's own readers use; rows must already be in
-    * the internal representation (UTF8String, micros-long timestamps,
-    * Decimal, …) matching `schema`.
+  /** Wrap a logical plan as a DataFrame — for plans built around graft's
+    * own Catalyst nodes (`graft.plans.KeyedScan`).
     */
-  def internalDf(spark: org.apache.spark.sql.SparkSession,
-                 rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-                 schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema)
+  def ofRows(spark: org.apache.spark.sql.SparkSession,
+             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }

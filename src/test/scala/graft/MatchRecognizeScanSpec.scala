@@ -352,7 +352,6 @@ class MatchRecognizeScanSpec extends SparkSpec {
     // a single exchange + a single sort (the q162 plan-guard precedent: if
     // this regresses, the operator pays a second full shuffle at 100 TB)
     ticker.createOrReplaceTempView("mr_ticker")
-    graft.core.PlanProbe.clear()
     val df = SqlFrontend.execute(spark,
       """SELECT * FROM mr_ticker MATCH_RECOGNIZE (
         |  PARTITION BY k ORDER BY ts, id
@@ -360,28 +359,23 @@ class MatchRecognizeScanSpec extends SparkSpec {
         |  ONE ROW PER MATCH
         |  PATTERN (S D+ U+)
         |  DEFINE D AS D.v < PREV(D.v), U AS U.v > PREV(U.v))""".stripMargin)
-    // r17: the scan runs on queryExecution.toRdd, so the exchange/sort live
-    // in the recorded CHILD plan; the OUTER plan must carry NO shuffle, NO
-    // sort and — the point of the InternalRow port — NO object boundary
-    val children = graft.core.PlanProbe.recorded
-    assert(children.nonEmpty, "scan did not record its child plan")
-    val plan = children.map(c => finalPlanOnly(c._2.executedPlan.toString)).mkString("\n")
-    val outer = df.queryExecution.executedPlan.toString
+    // ONE plan: the KeyedScan node sits in the query's own executed plan, on
+    // top of the window's exchange and sort — and reads internal rows, so no
+    // object boundary and no RDD re-entry
+    val plan = finalPlanOnly(df.queryExecution.executedPlan.toString)
     val exchanges = "Exchange".r.findAllIn(plan).size
     val sorts = "\\bSort\\b".r.findAllIn(plan).size
+    assert(plan.contains("KeyedScan"), s"scan node missing:\n${plan.take(3000)}")
     assert(exchanges == 1, s"expected ONE shared exchange, got $exchanges:\n${plan.take(3000)}")
     assert(sorts == 1, s"expected ONE shared sort, got $sorts:\n${plan.take(3000)}")
-    assert(!outer.contains("Exchange") && !"\\bSort\\b".r.findAllIn(outer).hasNext,
-      s"outer plan grew a shuffle/sort:\n${outer.take(3000)}")
-    assert(!outer.contains("DeserializeToObject") && !plan.contains("DeserializeToObject"),
-      s"MR scan re-grew the external-Row object boundary:\n${outer.take(3000)}")
+    assert(!plan.contains("DeserializeToObject") && !plan.contains("Scan ExistingRDD"),
+      s"MR scan re-grew an object boundary or an RDD re-entry:\n${plan.take(3000)}")
 
     // cross-variable route: the PREV nav helper column is a SEPARATE
     // selectExpr window pass before the scan — CollapseWindow must merge it
     // into the DEFINE window (same spec), keeping one exchange + one sort +
     // one Window; a second of any would double the 100 TB shuffle bill
-    graft.core.PlanProbe.clear()
-    SqlFrontend.execute(spark,
+    val df2 = SqlFrontend.execute(spark,
       """SELECT * FROM mr_ticker MATCH_RECOGNIZE (
         |  PARTITION BY k ORDER BY ts, id
         |  MEASURES FIRST(S.id) AS s_id, LAST(U.v) AS top
@@ -389,12 +383,11 @@ class MatchRecognizeScanSpec extends SparkSpec {
         |  PATTERN (S D+ U+)
         |  DEFINE D AS D.v < PREV(D.v),
         |         U AS U.v > PREV(U.v) AND U.v < FIRST(S.v))""".stripMargin)
-    val children2 = graft.core.PlanProbe.recorded
-    assert(children2.nonEmpty, "cross-var scan did not record its child plan")
-    val plan2 = children2.map(c => finalPlanOnly(c._2.executedPlan.toString)).mkString("\n")
+    val plan2 = finalPlanOnly(df2.queryExecution.executedPlan.toString)
     assert("Exchange".r.findAllIn(plan2).size == 1 &&
       "\\bSort\\b".r.findAllIn(plan2).size == 1 &&
-      "\\bWindow\\b".r.findAllIn(plan2).size == 1,
+      "\\bWindow\\b".r.findAllIn(plan2).size == 1 &&
+      !plan2.contains("DeserializeToObject") && !plan2.contains("Scan ExistingRDD"),
       s"cross-var route plan regressed:\n${plan2.take(3000)}")
   }
 
@@ -743,5 +736,39 @@ class MatchRecognizeScanSpec extends SparkSpec {
     val leftover = spark.catalog.listTables().collect()
       .map(_.name).filter(n => n.startsWith("__graft_mr_") || n.startsWith("__graft_llmops_"))
     assert(leftover.isEmpty, s"ephemeral rewrite views leaked: ${leftover.mkString(", ")}")
+  }
+
+  test("MEASURES MIN/MAX over strings follow UTF-8 byte order (UTF8String), not UTF-16") {
+    // U+1F600 is a supplementary code point: UTF-16 D83D DE00, UTF-8
+    // F0 9F 98 80. U+E000 is UTF-16 E000, UTF-8 EE 80 80. The two orders
+    // disagree on this pair; the scan compares the engine's internal
+    // UTF8String bytes, the same order as Spark's own min/max and DuckDB.
+    val supp = "\uD83D\uDE00"
+    val pua = "\uE000"
+    assert(supp.compareTo(pua) < 0, "UTF-16 order puts the supplementary char first")
+    val rows = Seq(("k", ts(0), 1L, supp), ("k", ts(1), 2L, pua)).toDF("k", "ts", "id", "s")
+    rows.createOrReplaceTempView("mr_utf8")
+    val r = SqlFrontend.execute(spark,
+      """SELECT * FROM mr_utf8 MATCH_RECOGNIZE (
+        |  PARTITION BY k ORDER BY ts, id
+        |  MEASURES MIN(A.s) AS mn, MAX(A.s) AS mx
+        |  ONE ROW PER MATCH
+        |  PATTERN (A+)
+        |  DEFINE A AS A.id > 0)""".stripMargin).collect()
+    assert(r.length == 1, s"expected one match, got ${r.length}")
+    assert(r.head.getAs[String]("mn") == pua && r.head.getAs[String]("mx") == supp,
+      s"got min ${r.head.getAs[String]("mn").codePointAt(0).toHexString}, " +
+        s"max ${r.head.getAs[String]("mx").codePointAt(0).toHexString}")
+    val native = rows.agg(min("s"), max("s")).head()
+    assert(native.getString(0) == pua && native.getString(1) == supp,
+      "Spark's own min/max must agree with the scan")
+  }
+
+  test("skipPastSelect refuses a non-integral length column at build") {
+    val df = Seq(("a", 1L, 2.0)).toDF("k", "ts", "len")
+    val err = intercept[RuntimeException] {
+      Behavior.skipPastSelect(df, Seq(col("k")), Seq(col("ts")), "len")
+    }
+    assert(err.getMessage.contains("must be integral"), err.getMessage)
   }
 }

@@ -97,23 +97,17 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q162: skip-past selection reuses the candidate window's exchange — one shuffle total") {
-    // r17: the skip-past scan runs on queryExecution.toRdd, so its exchange
-    // lives in the recorded CHILD plan (PlanProbe); the outer plan must stay
-    // shuffle-free AND object-boundary-free (the InternalRow port's point)
-    graft.core.PlanProbe.clear()
-    val outer = plan("q162_match_skip_past")
-    val children = graft.core.PlanProbe.recorded
-    assert(children.nonEmpty, "skipPastSelect did not record its child plan")
-    val p = children.map(c => finalPlanOnly(c._2.executedPlan.toString)).mkString("\n")
-    // skipPastSelect's explicit repartition(key) must COLLAPSE into the
-    // window's ENSURE_REQUIREMENTS exchange (same key): at 60M events the
-    // second shuffle would double the network cost for zero movement. The
-    // scan's (__spk, ts, tie) ordering is a cheap LOCAL re-sort on top of
-    // the window's existing (user, ts, tie) sort — two Sorts, one Exchange.
+    val p = finalPlanOnly(plan("q162_match_skip_past"))
+    // the scan's KeyedScan node requires the key clustering, which the
+    // candidate window's ENSURE_REQUIREMENTS exchange (same key) already
+    // provides: at 60M events a second shuffle would double the network cost
+    // for zero movement. The window's (user, ts, tie) sort also satisfies
+    // the scan's (user, ts, tie) ordering.
+    assert(p.contains("KeyedScan"), s"skip-past scan node missing:\n${p.take(2000)}")
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1,
       s"candidate window and skip-past scan must share one exchange:\n${p.linesIterator.filter(_.contains("Exchange")).mkString("\n")}")
-    assert(!outer.contains("Exchange") && !outer.contains("DeserializeToObject"),
-      s"outer plan must be shuffle- and object-boundary-free:\n${outer.take(2000)}")
+    assert(!p.contains("DeserializeToObject") && !p.contains("Scan ExistingRDD"),
+      s"plan must be object-boundary-free and read no RDD re-entry:\n${p.take(2000)}")
   }
 
   test("q76: decontamination's corpus scan is shuffle-free on the broadcast path") {
